@@ -415,6 +415,25 @@ def test_s25c_append_output_matches_golden_digest(spark):
     )
 
 
+def test_s25d_progress_reports_slot_sized_state_batches(spark):
+    """The memory-sink runner keeps the finished query's progress. s25d's
+    one-file replay runs two micro-batches (the data batch, then the
+    no-data batch that fires event-time timeouts), and its stateful
+    shuffle is sized to the session's task slots, at most 8."""
+    from tests.conftest import SF_SMOKE
+    from xgboost_ray_spark.registry import all_queries
+    from xgboost_ray_spark.streaming import windows as sw
+
+    all_queries()["s25d_stateful_sessions"].build(spark, SF_SMOKE).collect()
+    progress = sw.LAST_STREAM_PROGRESS
+    assert sorted({p["batchId"] for p in progress}) == [0, 1]
+    assert {
+        op["numShufflePartitions"]
+        for p in progress
+        for op in p["stateOperators"]
+    } == {min(8, spark.sparkContext.defaultParallelism)}
+
+
 class _FakeGroupState:
     """Minimal applyInPandasWithState GroupState stand-in for driving the
     sessionizer kernel directly — the stream harness tests above cover

@@ -21,19 +21,31 @@ text analysis) is declared through the DataFrame API so Catalyst handles
 pushdown, pruning, join selection and AQE — see ``operators/``.
 """
 
-from xgboost_ray_spark.matrix import MatrixSpec, ShardingMode, combine_data
-from xgboost_ray_spark.ml.params import GBTParams
-from xgboost_ray_spark.ml.train import predict, train
-from xgboost_ray_spark.session import get_spark
+from __future__ import annotations
+
+import importlib
+
 from xgboost_ray_spark.version import __version__
 
-__all__ = [
-    "MatrixSpec",
-    "ShardingMode",
-    "GBTParams",
-    "combine_data",
-    "train",
-    "predict",
-    "get_spark",
-    "__version__",
-]
+# Public names, imported on first access: Python workers import this
+# package (the worker daemon runs from it, and module-level mapInPandas
+# functions are pickled by reference), and most need neither pyspark.ml
+# nor pandas.
+_EXPORTS = {
+    "MatrixSpec": "xgboost_ray_spark.matrix",
+    "ShardingMode": "xgboost_ray_spark.matrix",
+    "combine_data": "xgboost_ray_spark.matrix",
+    "GBTParams": "xgboost_ray_spark.ml.params",
+    "train": "xgboost_ray_spark.ml.train",
+    "predict": "xgboost_ray_spark.ml.train",
+    "get_spark": "xgboost_ray_spark.session",
+}
+
+__all__ = [*_EXPORTS, "__version__"]
+
+
+def __getattr__(name: str):
+    module = _EXPORTS.get(name)
+    if module is None:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    return getattr(importlib.import_module(module), name)

@@ -74,6 +74,14 @@ def get_spark(
     builder = SparkSession.builder.master(master).appName(app_name)
     conf = dict(_DEFAULTS)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)
+    if master.split("[")[0] == "local":
+        # Python workers fork from the engine's daemon (worker_daemon.py),
+        # which must import this package from the worker's cwd. A cluster
+        # opts in by passing the same two keys through ``extra_conf``.
+        conf["spark.python.daemon.module"] = "xgboost_ray_spark.worker_daemon"
+        conf["spark.executorEnv.PYTHONPATH"] = os.path.dirname(
+            os.path.dirname(os.path.abspath(__file__))
+        )
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

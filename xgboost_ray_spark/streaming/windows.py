@@ -86,31 +86,30 @@ def windowed_counts(
     )
 
 
-# Stateful streaming parallelism is a DIFFERENT knob from batch shuffle
-# width: every shuffle partition materializes its own state-store instances
-# (a stream-stream join keeps four per partition), and their open/commit
-# overhead is paid per partition per microbatch regardless of data volume.
-# Size this to state VOLUME (keys held), not to CPU count — on the local
-# harness 8 partitions run the stateful suite 2-4x faster than 32 with
-# identical results; on a real cluster raise it until per-partition state
-# fits the executor state-store budget.
-STREAM_STATE_PARTITIONS = int(
-    __import__("os").environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-)
+# A stateful shuffle's partition count is captured into the query's state
+# layout at ``start()``, and each state partition is one task per
+# micro-batch that opens and commits its state-store instances (a
+# stream-stream join keeps four) whatever its data volume. That fixed cost
+# dominates at these sizes, so stateful queries use at most
+# ``MAX_STATE_PARTITIONS`` and never more than the session has task slots:
+# 8 partitions on 4 slots would run every micro-batch in two waves. On a
+# cluster whose state outgrows the executors' state-store budget, raise
+# the cap.
+MAX_STATE_PARTITIONS = 8
 
 
 @contextmanager
 def stream_state_partitions(spark: SparkSession):
-    """Pin ``spark.sql.shuffle.partitions`` to ``STREAM_STATE_PARTITIONS``
-    for the duration — the count is captured into a streaming query's
-    state layout at ``start()`` — and restore the batch value after.
-    The ONE copy of this save/set/restore protocol: every streaming
-    runner (memory sink, foreachBatch CDC) enters it here so the restore
+    """Pin ``spark.sql.shuffle.partitions`` to the stateful partition
+    count for the duration and restore the batch value after. The ONE
+    copy of this save/set/restore protocol: every streaming runner
+    (memory sink, foreachBatch CDC) enters it here so the restore
     semantics cannot drift between entries."""
     batch_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
+    state_parts = min(
+        MAX_STATE_PARTITIONS, spark.sparkContext.defaultParallelism
     )
+    spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
     try:
         yield
     finally:
@@ -128,23 +127,38 @@ def stream_state_partitions(spark: SparkSession):
 _MEMORY_SINK_VIEWS: deque[tuple[SparkSession, str]] = deque()
 _MEMORY_SINK_KEEP = 8
 
-# Most recent micro-batch executed plan, stashed by the two runners for
-# the streaming leg of the plan-hygiene sweep (tests/test_plan_hygiene.py
-# pins the batch catalog directly; streaming plans only exist while a
-# query runs, so the runner captures them in passing). One list cell,
-# overwritten per run — read it immediately after the build returns.
+# The most recent run's last micro-batch executed plan and its progress
+# reports, stashed by the two runners: the plan for the streaming leg of
+# the plan-hygiene sweep (tests/test_plan_hygiene.py pins the batch catalog
+# directly; streaming plans only exist while a query runs, so the runner
+# captures them in passing), the progress (``StreamingQuery.recentProgress``:
+# batch ids and durations, state-operator rows and shuffle partitions,
+# watermark) for tests and profiles. One list cell each, overwritten per
+# run — read them immediately after the build returns.
 LAST_STREAM_PLAN: list[str] = []
+LAST_STREAM_PROGRESS: list[dict] = []
 
 
-def _capture_stream_plan(q) -> None:
-    """Stash the finished query's lastExecution plan text (explainInternal
-    reads driver-side state — no job, one py4j call, covered by the
-    build-cost ceilings' headroom). Advisory: capture failures leave the
-    cell empty rather than failing the run."""
+def _clear_last_run() -> None:
+    """Called BEFORE start, so a failed run leaves the cells empty, never
+    the previous query's (their contract is "this run's")."""
+    LAST_STREAM_PLAN[:] = []
+    LAST_STREAM_PROGRESS[:] = []
+
+
+def _capture_last_run(q) -> None:
+    """Stash the finished query's lastExecution plan text and its
+    recentProgress (driver-side state — no job, a few py4j calls, covered
+    by the build-cost ceilings' headroom). Advisory: a capture failure
+    leaves its cell empty rather than failing the run."""
     try:
         LAST_STREAM_PLAN[:] = [q._jsq.explainInternal(True)]
     except Exception:
         LAST_STREAM_PLAN[:] = []
+    try:
+        LAST_STREAM_PROGRESS[:] = q.recentProgress
+    except Exception:
+        LAST_STREAM_PROGRESS[:] = []
 
 
 def run_stream_to_memory(
@@ -152,9 +166,7 @@ def run_stream_to_memory(
 ) -> DataFrame:
     """Run a streaming aggregation to completion into a memory sink."""
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    # Clear BEFORE start so a failed run leaves the cell empty, never the
-    # previous query's plan (the cell's contract is "this run's plan").
-    LAST_STREAM_PLAN[:] = []
+    _clear_last_run()
     with stream_state_partitions(spark):
         q = (
             agg.writeStream.outputMode(output_mode)
@@ -170,7 +182,7 @@ def run_stream_to_memory(
         _MEMORY_SINK_VIEWS.append((spark, name))
         try:
             q.processAllAvailable()
-            _capture_stream_plan(q)
+            _capture_last_run(q)
         finally:
             q.stop()
     # The memory sink keeps the result rows after stop(); the uniquely-named
@@ -217,10 +229,8 @@ def run_stream_to_files(
     )
     if partition_by:
         writer = writer.partitionBy(partition_by)
-    # Same pre-start clear as run_stream_to_memory: a failed run must not
-    # leave the previous query's plan readable as this run's.
-    LAST_STREAM_PLAN[:] = []
+    _clear_last_run()
     q = writer.start()
     q.awaitTermination()
-    _capture_stream_plan(q)
+    _capture_last_run(q)
     return spark.read.parquet(out_dir)
